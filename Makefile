@@ -3,7 +3,7 @@
 PY ?= python
 DIST = dist/ehr_relation_extraction_spark.zip
 
-.PHONY: test bench scaling matrix curation-bench package submit-smoke curate-smoke train-cascade-smoke store-smoke store-smoke-manifest clean
+.PHONY: test bench perfbench scaling matrix curation-bench package submit-smoke curate-smoke train-cascade-smoke store-smoke store-smoke-manifest clean
 
 test:
 	$(PY) -m pytest tests/ -x -q
@@ -13,6 +13,17 @@ bench:
 
 scaling:
 	$(PY) bench.py --scaling
+
+# End-to-end metrics of the staged-job benchmark (perfbench/README.md)
+# on both declared workloads at one fixed seed, about 2 min on 4 CPUs.
+# Run it on two checkouts on the same box to compare before and after.
+perfbench:
+	@mkdir -p .perfbench
+	@for w in crawl_bulk crawl_resume; do \
+	  $(PY) perfbench/run.py --workload $$w --seed 1 --seconds 18 --trace 0 \
+	    > .perfbench/$$w.out; rc=$$?; \
+	  grep " = " .perfbench/$$w.out; [ $$rc -eq 0 ] || exit $$rc; \
+	done
 
 # Full-registry oracle sweep -> committed per-round artifact
 # (SWEEP_r06.json): per-key pass/fail + wall time at sf0.01.

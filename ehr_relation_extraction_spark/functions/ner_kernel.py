@@ -42,37 +42,50 @@ from ..config import GAZETTEER, PATTERN_RULES
 ALNUM_RE = re.compile(r"[0-9A-Za-z]")
 
 
-def gazetteer_by_ngram(gazetteer=GAZETTEER) -> dict[int, dict[str, tuple[str, str]]]:
-    """alias-token-count -> {alias_lower: (ent_type, canonical_id)}."""
-    out: dict[int, dict[str, tuple[str, str]]] = {}
+class AliasTable(dict):
+    """One n-gram level of the gazetteer, ``{alias_lower: (ent_type,
+    canonical_id)}``, plus ``firsts``: the set of the aliases' first
+    words, which prefilters the n-gram scan.  Built once per table, not
+    per document.  Every insert keeps ``firsts`` current, so an alias
+    added after first use is still found; a removal leaves ``firsts``
+    a superset, which only costs a failed lookup."""
+
+    def __init__(self, *args, **kw):
+        super().__init__(*args, **kw)
+        self.firsts = {a.split(" ", 1)[0] for a in self}
+
+    def __setitem__(self, alias, value):
+        super().__setitem__(alias, value)
+        self.firsts.add(alias.split(" ", 1)[0])
+
+    def setdefault(self, alias, default=None):
+        self.firsts.add(alias.split(" ", 1)[0])
+        return super().setdefault(alias, default)
+
+    def update(self, *args, **kw):
+        for alias, value in dict(*args, **kw).items():
+            self[alias] = value
+
+    def __ior__(self, other):
+        self.update(other)
+        return self
+
+    def __reduce__(self):  # pickled into UDF closures
+        return type(self), (dict(self),)
+
+
+def gazetteer_by_ngram(gazetteer=GAZETTEER) -> dict[int, AliasTable]:
+    """alias-token-count -> AliasTable {alias_lower: (ent_type, canonical_id)}."""
+    out: dict[int, AliasTable] = {}
     for alias, ent_type, canonical in gazetteer:
         n = len(alias.split(" "))
-        out.setdefault(n, {})[alias.lower()] = (ent_type, canonical)
+        out.setdefault(n, AliasTable())[alias.lower()] = (ent_type, canonical)
     return out
 
 
 _GAZ_BY_N = gazetteer_by_ngram()
 _PATTERNS = [(re.compile(pat, re.IGNORECASE), ent_type)
              for pat, ent_type in PATTERN_RULES]
-
-# First-word prefilter sets for the n-gram alias paths, cached per
-# aliases dict (r06: this was rebuilt per DOCUMENT before — pure
-# overhead for a module-lifetime dictionary).  The cache value holds a
-# strong reference to the keyed dict so an id() can never be reused
-# while its entry is alive; bounded because only a handful of
-# gazetteers exist per process (default/perturbed/expanded).
-_FIRSTS_CACHE: dict[int, tuple[dict, set[str]]] = {}
-
-
-def _firsts_of(aliases: dict) -> set[str]:
-    hit = _FIRSTS_CACHE.get(id(aliases))
-    if hit is not None and hit[0] is aliases:
-        return hit[1]
-    firsts = {a.split(" ", 1)[0] for a in aliases}
-    if len(_FIRSTS_CACHE) > 16:
-        _FIRSTS_CACHE.clear()
-    _FIRSTS_CACHE[id(aliases)] = (aliases, firsts)
-    return firsts
 
 
 def _alternate(cands: list[tuple[int, int]]) -> list[tuple[int, int]]:
@@ -121,7 +134,7 @@ def pattern_spans(text: str,
 
 def detect_mentions(text: str,
                     offsets: list[tuple[str, int, int]],
-                    gaz_by_n: dict | None = None,
+                    gaz_by_n: dict[int, AliasTable] | None = None,
                     fixed_bugs: bool = False,
                     ) -> list[tuple[str, int, int, str]]:
     """Return mentions ``[(ent_type, start, end, ent_text), ...]``
@@ -147,7 +160,7 @@ def detect_mentions(text: str,
                     by_type.setdefault(hit[0], set()).add((start, end))
             continue
         # n-gram path: prefilter on the first word of each alias
-        firsts = _firsts_of(aliases)
+        firsts = aliases.firsts
         for i in range(len(offsets) - n + 1):
             if toks_low[i] not in firsts:
                 continue

@@ -16,7 +16,10 @@ Sizing note: pick n_buckets so one bucket of the LARGEST co-bucketed
 stage fits an executor's memory at the target SF — buckets are the
 unit of join parallelism and cannot be split further (no AQE inside a
 bucket), so at 100 TB prefer more, smaller buckets (e.g. 4096) over
-fewer, larger ones.
+fewer, larger ones.  The staged job (plans/stages.py) follows this by
+taking its bucket count from ``spark.sql.shuffle.partitions``: size the
+session's shuffle partitions for the target SF and the url-keyed stage
+tables follow, while a small session writes few files per task.
 """
 
 from __future__ import annotations

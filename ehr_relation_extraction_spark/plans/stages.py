@@ -7,11 +7,19 @@ write-once stage tables: a stage whose output table already exists
 the last completed boundary (north rule: "resumable from checkpoint
 with per-partition lineage + metrics").
 
-Lineage: for every completed stage we append one row per output file
-partition — (run_id, stage, partition_id, n_rows, wall_ms, ts) — to
-``<out_dir>/_lineage``.  Partition counts come from
-``spark_partition_id()`` over the *written* table, so they describe the
-durable artifact, not a transient shuffle.
+Lineage: every completed stage leaves one small parquet file,
+``<out_dir>/_lineage/<run_id>-<stage>.parquet``, with one row per
+data file of the stage table — (run_id, stage, partition_id, n_rows,
+wall_ms).  ``partition_id`` is the file's ordinal in the sorted
+listing of the stage directory, and ``n_rows`` comes from that file's
+parquet footer, read on the driver.  Lineage therefore describes the
+durable artifact, not a transient shuffle, and costs no Spark job.
+
+Buckets: the url-keyed stages (shards, mentions) are written with
+``spark.sql.shuffle.partitions`` buckets, the session's own
+parallelism.  Both get the same count, so their pairing join reads
+co-located buckets with no Exchange, and a small session does not pay
+for a fixed fan-out of files per task.
 """
 
 from __future__ import annotations
@@ -21,11 +29,25 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+
+_LINEAGE_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("stage", pa.string()),
+    ("partition_id", pa.int32()), ("n_rows", pa.int64()),
+    ("wall_ms", pa.int64())])
 
 
 def _success(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def _data_files(path: str) -> list[str]:
+    """The files Spark reads as the table at ``path``, sorted; like
+    Spark, skip names starting with '_' or '.' (markers, checksums)."""
+    return sorted(os.path.join(path, f) for f in os.listdir(path)
+                  if not f.startswith(("_", ".")))
 
 
 class StageRunner:
@@ -48,23 +70,50 @@ class StageRunner:
         self.events: list[dict] = []
         os.makedirs(out_dir, exist_ok=True)
 
+    def _file_rows(self, stage: str) -> list[int]:
+        """Row count of each data file of the stage table, in file
+        order, from metadata only: parquet footers, or the per-file
+        ``record_count`` of Iceberg's ``.files`` metadata table."""
+        if self.fmt == "iceberg":
+            files = self.spark.read.table(f"{self.catalog}.{stage}.files")
+            return [r[0] for r in files.orderBy("file_path")
+                    .select("record_count").collect()]
+        return [pq.read_metadata(f).num_rows
+                for f in _data_files(os.path.join(self.out_dir, stage))]
+
     def _lineage(self, stage: str, df: DataFrame, wall_ms: int) -> None:
-        rows = (df.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
-                .withColumn("run_id", F.lit(self.run_id))
-                .withColumn("stage", F.lit(stage))
-                .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
-                .select("run_id", "stage", "partition_id", "n_rows", "wall_ms"))
-        rows.write.mode("append").parquet(os.path.join(self.out_dir, "_lineage"))
+        """Write the stage's lineage file (module docstring).  ``df`` is
+        the stage table as written; its rows are never scanned."""
+        rows = self._file_rows(stage)
+        n = len(rows)
+        table = pa.table({
+            "run_id": [self.run_id] * n, "stage": [stage] * n,
+            "partition_id": list(range(n)), "n_rows": rows,
+            "wall_ms": [wall_ms] * n}, schema=_LINEAGE_SCHEMA)
+        lineage_dir = os.path.join(self.out_dir, "_lineage")
+        os.makedirs(lineage_dir, exist_ok=True)
+        name = f"{self.run_id}-{stage}.parquet"
+        # write under a hidden name, then rename: a reader of _lineage
+        # never sees a half-written file
+        tmp = os.path.join(lineage_dir, "." + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(lineage_dir, name))
 
     def run(self, stage: str, build: Callable[[], DataFrame],
-            bucket_keys: list[str] | None = None,
-            n_buckets: int = 32) -> DataFrame:
-        """``bucket_keys``: write this stage as a BUCKETED table
+            bucket_keys: list[str] | None = None) -> DataFrame:
+        """Materialize ``build()`` as the stage table, or read it back
+        when a previous run completed it.
+
+        ``bucket_keys``: write this stage as a BUCKETED table
         (bucketBy + sortBy on those keys) so downstream equi-joins on
         the stage key read co-located buckets with zero Exchange
         (plans/bucketed.py; the parquet form of Iceberg bucket(N, k)).
-        Resume still keys off the _SUCCESS marker at the stage path."""
+        The bucket count is the session's ``spark.sql.shuffle.partitions``,
+        so every bucketed stage of one session shares it.  Resume still
+        keys off the _SUCCESS marker at the stage path.
+
+        A stage that runs then records its lineage from the written
+        files' footers (module docstring) and rewrites the manifest."""
         if self.fmt == "iceberg":
             return self._run_iceberg(stage, build)
         path = os.path.join(self.out_dir, stage)
@@ -79,14 +128,18 @@ class StageRunner:
             return self.spark.read.parquet(path)
         t0 = time.time()
         if bucket_keys:
+            n_buckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             self.spark.sql(f"DROP TABLE IF EXISTS {table}")
             (build().write.bucketBy(n_buckets, *bucket_keys)
              .sortBy(*bucket_keys).option("path", path)
              .mode("overwrite").saveAsTable(table))
             out = self.spark.table(table)
         else:
-            build().write.mode("overwrite").parquet(path)
-            out = self.spark.read.parquet(path)
+            df = build()
+            df.write.mode("overwrite").parquet(path)
+            # the schema is known: passing it skips the Spark job that
+            # infers it from a footer (the read is nullable either way)
+            out = self.spark.read.schema(df.schema).parquet(path)
         wall_ms = int((time.time() - t0) * 1000)
         self._lineage(stage, out, wall_ms)
         self.events.append({"stage": stage, "action": "ran", "wall_ms": wall_ms})
@@ -96,7 +149,9 @@ class StageRunner:
     def _run_iceberg(self, stage: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Iceberg stage tables (requires iceberg-spark-runtime on the
         classpath and a configured catalog — untestable in this sandbox,
-        kept as the documented production path)."""
+        kept as the documented production path).  Lineage takes each
+        data file's ``record_count`` from the table's ``.files``
+        metadata table, which reads manifests and never scans data."""
         name = f"{self.catalog}.{stage}"
         if self.spark.catalog.tableExists(name):
             self.events.append({"stage": stage, "action": "skipped"})

@@ -44,6 +44,12 @@ def get_spark(app_name: str = "kg-construct",
         # cardinality key in the engine, so subset partitioning loses
         # no parallelism).  Measured sf1.0 local[32]: candidates 0.75
         # -> 0.13 s, triples 0.91 -> 0.23 s.
+        # The conf is session-global: every join of every query built on
+        # this session may reuse a partitioning on a subset of its keys.
+        # Results stay correct, but a join whose subset key has few
+        # distinct values (or a hot one) then runs with low parallelism
+        # or skew; outside the url-keyed pipeline, repartition on the
+        # full join key when that matters.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")

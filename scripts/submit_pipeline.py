@@ -10,8 +10,9 @@ Usage (cluster):
 
 The job is the checkpointed stage pipeline (plans/stages.py): pages ->
 shards/mentions -> candidates -> relations -> triples -> linked ->
-components -> nodes/edges, resumable per stage, lineage rows appended
-per partition.
+components -> nodes/edges, resumable per stage.  Each completed stage
+leaves a lineage file with one row per data file of its table, read
+from the parquet footers without a Spark job.
 """
 
 from __future__ import annotations

@@ -216,6 +216,33 @@ class TestNerKernel:
         # both bigrams shadowed
         assert events == [(2, 6), (11, 15)]
 
+    def test_alias_added_after_first_use_is_found(self):
+        # the first-word prefilter lives on the alias table, so an
+        # n-gram alias inserted after the table was used still matches
+        import pickle
+
+        from ehr_relation_extraction_spark.functions.ner_kernel import (
+            gazetteer_by_ngram)
+
+        gaz = gazetteer_by_ngram()
+        text = "x zeta omega y"
+        toks = tokenize_with_offsets(text)
+        assert detect_mentions(text, toks, gaz_by_n=gaz) == []
+        gaz[2]["zeta omega"] = ("Event", "event:zeta-omega")
+        want = [("Event", 2, 12, "zeta omega")]
+        assert detect_mentions(text, toks, gaz_by_n=gaz) == want
+        # and the table keeps it when shipped in a UDF closure
+        shipped = pickle.loads(pickle.dumps(gaz))
+        assert detect_mentions(text, toks, gaz_by_n=shipped) == want
+        # update() and setdefault() keep the prefilter current too
+        gaz[2].update({"psi chi": ("Event", "event:psi-chi")})
+        gaz[3] = type(gaz[2])()
+        gaz[3].setdefault("nu mu xi", ("Event", "event:nu-mu-xi"))
+        text = "x psi chi y nu mu xi z"
+        assert [m[3] for m in detect_mentions(
+            text, tokenize_with_offsets(text), gaz_by_n=gaz)] == [
+            "psi chi", "nu mu xi"]
+
     def test_non_alnum_filter(self):
         # predict.py:345-346 — needs an alnum char; gazetteer words all
         # have them, so craft via pattern? covered by construction; just
